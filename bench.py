@@ -143,7 +143,7 @@ def run_flagship(
                 # by pmod(xxhash64(bucket)) partitions the stage EXACTLY —
                 # each slice computes precisely the edges of its buckets.
                 # Buckets materialize once (one Arrow pass over signatures);
-                # each slice's window/groupBy scratch is released before the
+                # each slice's two groupBy scratches are released before the
                 # next starts. The 16M-image probe dies in this stage
                 # unsliced (~65 GB of window-sort shuffle in one execution).
                 # The same pair found by buckets in different slices
@@ -159,11 +159,12 @@ def run_flagship(
                         F.pmod(F.xxhash64("bucket"), F.lit(n_slices)) == s
                     )
                     # cache_buckets=True: the slice's (bucket, salt) aggregation
-                    # feeds three consumers (chains, rep rollup, cliques);
-                    # persisting it MEMORY_AND_DISK (~2 GB per 2M-image slice,
-                    # vs the 16 GB heap) saves two recomputes of the slice scan
-                    # + groupBy. _release_scratch below drops it before the
-                    # next slice, so peak footprint stays one slice's worth.
+                    # feeds two consumers (level-1 chains, the per-bucket
+                    # rollup behind rep chains and cliques); persisting it
+                    # MEMORY_AND_DISK (~2 GB per 2M-image slice, vs the 16 GB
+                    # heap) saves a recompute of the slice scan + groupBy.
+                    # _release_scratch below drops it before the next slice,
+                    # so peak footprint stays one slice's worth.
                     lsh.edges_from_buckets(
                         sl, cfg.bucket_pair_cap, cfg.chain_salts, cache_buckets=True
                     ).write.mode("overwrite").parquet(f"{scratch_dir}/edges/slice={s}")
@@ -441,7 +442,9 @@ def _graph_edges(spark):
     modularity/diameter) — the production shape: a campaign materializes its
     edge list once and every diagnostic reads it, so per-query walls below
     time the graph operator itself, not a rebuild of the dedup front-end."""
-    key = id(spark)
+    # keyed by the application, not id(spark): a later session can reuse a
+    # collected session's address and must not get its checkpointed frames
+    key = spark.sparkContext.applicationId
     if key not in _EDGE_CACHE:
         import __spark_entry__ as entry
         from lmw_tree_spark.config import SMALL

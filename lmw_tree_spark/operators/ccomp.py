@@ -13,8 +13,12 @@ iterative lineage so plans don't grow superlinearly with rounds.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+class ConvergenceError(RuntimeError):
+    """Label propagation still changed labels after its last allowed round."""
 
 
 def connected_components(
@@ -23,15 +27,29 @@ def connected_components(
     max_iters: int = 25,
     id_col: str = "image_id",
     label_col: str = "dup_group",
+    rounds: list[int] | None = None,
 ) -> DataFrame:
     """edges (src, dst) [+ optional vertex universe] → (id_col, label_col).
 
     Vertices not touched by any edge keep themselves as their label (singleton
-    groups) when a vertex universe is supplied.
+    groups) when a vertex universe is supplied. ``rounds``, when given, is
+    extended with each round's count of changed labels (the last is 0 on
+    convergence). Raises ``ConvergenceError`` when labels still change in
+    round ``max_iters`` — partial labels are never returned.
     """
+    if max_iters < 1:
+        raise ValueError(f"max_iters must be >= 1, got {max_iters}")
+    # symmetric edges plus one self-loop per vertex: the closed neighborhood,
+    # so a single join + groupBy yields both a vertex's new label and its
+    # previous one (the self-loop row carries it) — no labels ⟕ nbr_min join
+    uv = [("src", "dst"), ("dst", "src"), ("src", "src"), ("dst", "dst")]
     sym = (
-        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .unionByName(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
+        edges.select(
+            F.explode(
+                F.array(*[F.struct(F.col(a).alias("u"), F.col(b).alias("v")) for a, b in uv])
+            ).alias("e")
+        )
+        .select("e.u", "e.v")
         .dropDuplicates(["u", "v"])
         .localCheckpoint(eager=True)
     )
@@ -43,41 +61,52 @@ def connected_components(
     # is just the no-change confirmation — one fewer full round.
     labels = (
         sym.groupBy("u")
-        .agg(F.least(F.col("u"), F.min("v")).alias("label"))
+        .agg(F.min("v").alias("label"))
         .withColumnRenamed("u", "id")
         .localCheckpoint(eager=True)
     )
 
+    changed = None
     for _ in range(max_iters):
-        nbr_min = (
+        stepped = (
             sym.join(labels.withColumnRenamed("id", "v"), "v")
             .groupBy("u")
-            .agg(F.min("label").alias("nbr_label"))
+            .agg(
+                F.max(F.when(F.col("u") == F.col("v"), F.col("label"))).alias("_prev"),
+                F.min("label").alias("label"),
+            )
             .withColumnRenamed("u", "id")
-        )
-        stepped = labels.join(nbr_min, "id", "left").select(
-            "id",
-            F.col("label").alias("_prev"),
-            F.least(F.col("label"), F.coalesce("nbr_label", "label")).alias("label"),
         )
         # pointer jumping: label(v) ← label(label(v)) — makes convergence
         # logarithmic in component diameter instead of linear (path-graph case)
         jump = stepped.select(F.col("id").alias("jid"), F.col("label").alias("jlabel"))
-        new_with_prev = (
-            stepped.join(jump.withColumnRenamed("jid", "label"), "label", "left")
-            .select(
-                "id",
-                "_prev",
-                F.least(F.col("label"), F.coalesce("jlabel", "label")).alias("label"),
+        new_with_prev = stepped.join(
+            jump.withColumnRenamed("jid", "label"), "label", "left"
+        ).select(
+            "id",
+            "_prev",
+            F.least(F.col("label"), F.coalesce("jlabel", "label")).alias("label"),
+        )
+        # the changed-label count rides the round's materialization as an
+        # Observation (the old label rode along as _prev) — no extra job
+        obs = Observation()
+        labels = (
+            new_with_prev.observe(
+                obs, F.sum((F.col("label") != F.col("_prev")).cast("long")).alias("changed")
             )
             .localCheckpoint(eager=True)
+            .select("id", "label")
         )
-        # convergence check is a FILTER over the frame just materialized (the
-        # old label rode along as _prev) — no extra old-vs-new join/shuffle
-        changed = new_with_prev.where(F.col("label") != F.col("_prev")).limit(1).count()
-        labels = new_with_prev.select("id", "label")
+        changed = obs.get["changed"] or 0
+        if rounds is not None:
+            rounds.append(changed)
         if changed == 0:
             break
+    if changed != 0:
+        raise ConvergenceError(
+            f"connected components did not converge in max_iters={max_iters} "
+            f"rounds ({changed} labels changed in the last one)"
+        )
 
     out = labels.select(F.col("id").alias(id_col), F.col("label").alias(label_col))
     if vertices is not None:

@@ -148,13 +148,13 @@ def edges_from_buckets(
 ) -> DataFrame:
     """(bucket, image_id) → candidate edges (src < dst), JVM-only.
 
-    The plan fans out over ``buckets`` FOUR ways (level-1 chains, per-salt
-    reps, bucket counts, clique join) — without materialization every consumer
-    re-runs the upstream bucket generators (four Arrow mapInPandas passes over
-    the signature table in the image pipeline: measured 4-8x the warm cost of
-    the stage at bench scale). ``cache_buckets`` persists the narrow
-    (bucket, id) rows MEMORY_AND_DISK before the fan-out: one materialization,
-    spill-backed so a 100 TB run (~tens of keys per row) degrades to local-disk
+    The plan fans out over ``agg1`` (the per-(bucket, salt) member arrays) two
+    ways — level-1 chains and the per-bucket rollup — and without
+    materialization each consumer re-runs the upstream bucket generators (an
+    Arrow mapInPandas pass over the signature table in the image pipeline:
+    measured 4-8x the warm cost of the stage at bench scale).
+    ``cache_buckets`` persists ``agg1`` MEMORY_AND_DISK before the fan-out:
+    one materialization, spill-backed so a 100 TB run degrades to local-disk
     reads instead of OOM; pass False to trade recompute for zero cache
     footprint when the upstream is itself a cheap scan.
 
@@ -165,8 +165,8 @@ def edges_from_buckets(
     AQE splits skewed *joins* but can never split a *window* partition — which is
     why there is NO window here at all: the 16M-image probe's event logs showed
     the per-partition window sorts of an earlier formulation dominating the
-    candidate-edge stage, so the whole stage now rides ONE hash aggregation of
-    the raw bucket table):
+    candidate-edge stage, so the whole stage now rides two hash aggregations,
+    the first over the raw bucket table, the second over its output):
 
     - ``agg1`` groups by ``(bucket, salt)`` with ``salt = hash(id) %
       chain_salts`` — a fixed salting that needs NO bucket size, so no
@@ -174,20 +174,25 @@ def edges_from_buckets(
       aggregation buffer is ~``size/chain_salts`` ids: a 10M-row bucket of
       identical memes becomes ~2.4k-element arrays at the default 4096 salts.
       This is the only shuffle that touches the raw table; it is hash-based
-      (no sort phase) and every downstream consumer reads the persisted result.
+      (no sort phase).
     - *Level-1 chains*: adjacent pairs of each sorted per-salt array — a pure
       array transform over ``agg1``, zero further shuffle.
-    - *Level-2* chains the per-salt representatives (array head = min id per
-      sub-chain) within each bucket — an ``agg1``-sized groupBy whose buffers
-      are ≤ ``chain_salts`` entries, restoring cross-salt connectivity.
-      Singleton and small buckets chain entirely here (their members land in
-      distinct salts), so level 1 is a no-op for them and the behavior matches
-      unsalted sorted-adjacency chaining.
-    - *Cliques* need bucket sizes — one partial-agg rollup of ``agg1``'s array
-      sizes (skew-immune) — and the members-of-small-buckets join is an
-      ``agg1``-sized equi-join AQE can split; the flatten buffer is bounded
-      because only buckets ≤ pair_cap reach it. Pair expansion is an array
-      transform — no self-join.
+    - ``agg2`` groups ``agg1`` by bucket. It collects the per-salt
+      representatives (array head = min id per sub-chain), the bucket size,
+      and the member arrays of the salt groups holding ≤ ``pair_cap`` ids.
+      Its buffer per bucket is therefore bounded by ``chain_salts`` reps plus
+      ``chain_salts × pair_cap`` member ids, however large the bucket.
+    - *Level-2* chains the sorted representatives within each bucket,
+      restoring cross-salt connectivity. Singleton and small buckets chain
+      entirely here (their members land in distinct salts), so level 1 is a
+      no-op for them and the behavior matches unsalted sorted-adjacency
+      chaining.
+    - *Cliques*: a bucket with ``2 ≤ bsize ≤ pair_cap`` holds only salt
+      groups of ≤ ``pair_cap`` ids, so flattening its collected member arrays
+      gives its full membership — no join back to ``agg1``. Pair expansion is
+      an array transform — no self-join. Level-2 chains and cliques come out
+      of ONE projection of ``agg2``: a small bucket emits only its clique,
+      which already holds its rep chain, so ``agg2`` is evaluated once.
 
     Producers guarantee (bucket, image_id) uniqueness; the final
     ``dropDuplicates`` dedups across the three edge sources."""
@@ -202,47 +207,41 @@ def edges_from_buckets(
 
         agg1 = agg1.persist(StorageLevel.MEMORY_AND_DISK)
 
-    # adjacent pairs of a sorted array — the chain linker shared by both levels
-    adj_expr = (
-        "transform(sequence(1, size(ids) - 1), "
-        "i -> struct(ids[i - 1] AS src, ids[i] AS dst))"
-    )
-
-    def chain_of(df: DataFrame) -> DataFrame:
-        return (
-            df.where(F.size("ids") >= 2)
-            .select(F.explode(F.expr(adj_expr)).alias("p"))
-            .select("p.src", "p.dst")
+    def adjacent_pairs(arr: str) -> F.Column:
+        # adjacent pairs of a sorted array — the chain linker of both levels
+        return F.expr(
+            f"transform(sequence(1, size({arr}) - 1), "
+            f"i -> struct({arr}[i - 1] AS src, {arr}[i] AS dst))"
         )
 
-    chain = chain_of(agg1)
+    def all_pairs(arr: str) -> F.Column:
+        return F.expr(
+            f"flatten(transform({arr}, (x, i) -> transform(slice({arr}, i + 2, "
+            f"size({arr})), y -> struct(x AS src, y AS dst))))"
+        )
 
-    reps = agg1.select(
-        "bucket", F.element_at("ids", 1).alias("rep"), F.size("ids").alias("sz")
-    )
-    agg2 = reps.groupBy("bucket").agg(
-        F.sort_array(F.collect_list("rep")).alias("ids"),
-        F.sum("sz").alias("bsize"),
-    )
-    rep_chain = chain_of(agg2)
+    chain = agg1.where(F.size("ids") >= 2).select(adjacent_pairs("ids").alias("p"))
 
-    small_ids = agg2.where(
-        (F.col("bsize") >= 2) & (F.col("bsize") <= pair_cap)
-    ).select("bucket")
-    pairs_expr = (
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids)), y -> struct(x AS src, y AS dst))))"
+    agg2 = agg1.groupBy("bucket").agg(
+        F.sort_array(F.collect_list(F.element_at("ids", 1))).alias("reps"),
+        F.sum(F.size("ids")).alias("bsize"),
+        # collect_list skips the nulls of oversized salt groups
+        F.collect_list(F.when(F.size("ids") <= pair_cap, F.col("ids"))).alias("small"),
     )
-    clique = (
-        agg1.join(small_ids, "bucket")
-        .groupBy("bucket")
-        .agg(F.sort_array(F.flatten(F.collect_list("ids"))).alias("ids"))
-        .select(F.explode(F.expr(pairs_expr)).alias("p"))
-        .select("p.src", "p.dst")
+    # one pass over agg2: a small bucket emits its clique, which contains its
+    # rep chain (consecutive reps are members); a larger one chains its reps
+    bucket_edges = agg2.select(
+        F.when(
+            F.col("bsize").between(2, pair_cap),
+            all_pairs("sort_array(flatten(small))"),
+        )
+        .when(F.size("reps") >= 2, adjacent_pairs("reps"))
+        .alias("p")
     )
     return (
-        chain.unionByName(rep_chain)
-        .unionByName(clique)
+        chain.unionByName(bucket_edges)
+        .select(F.explode("p").alias("e"))
+        .select("e.src", "e.dst")
         .dropDuplicates(["src", "dst"])
     )
 

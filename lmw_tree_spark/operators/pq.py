@@ -184,7 +184,8 @@ def pq_adc_topk(
     large."""
     cb = np.ascontiguousarray(codebook, dtype=np.float64)
     m, ksub, _ = cb.shape
-    if codes is None:
+    encoded = codes is None
+    if encoded:
         codes = pq_encode(df, codebook, id_col, vec_col)
         if n_rows is None:
             n_rows = df.count()
@@ -196,7 +197,9 @@ def pq_adc_topk(
 
     queries = df if query_pred is None else df.where(query_pred)
     if n_queries is None:
-        n_queries = int(n_rows) if query_pred is None else queries.count()
+        # the query side is all of df (or its predicate slice), never the
+        # supplied codes subset — reuse n_rows only when it counted df
+        n_queries = int(n_rows) if encoded and query_pred is None else queries.count()
     n_qchunks = max(1, -(-int(n_queries) // q_chunk_rows))
 
     codes_c = (
@@ -411,9 +414,10 @@ def _adc_shortlist(
         return pd.DataFrame(
             {"query_id": qids[rows], "neighbor_id": sel_nids, "adc_dist": vals}
         )
-    # dense scan: subspace-at-a-time accumulation — same left-to-right
-    # summation order as a (Q, B, m).sum(axis=2), bitwise identical, 1/m
-    # the memory
+    # dense scan: subspace-at-a-time accumulation, 1/m the memory of a
+    # (Q, B, m).sum(axis=2). Left-to-right order is identical to that sum for
+    # m <= 8; beyond, NumPy's unrolled pairwise sum may differ in the last
+    # ulp before the rounding below
     adc = np.zeros((len(qx), b))
     for j in range(m):
         adc += lut2[:, j * ksub + c[:, j]]
@@ -689,7 +693,15 @@ def _int_topk(
             bmat = uniqb if collapsed else b
             amax = int(np.abs(a).max(initial=0))
             bmax = int(np.abs(bmat).max(initial=0))
-            if amax * bmax * a.shape[1] < 2**53:
+            bound = amax * bmax * a.shape[1]
+            if bound >= 2**63:
+                # the int64 matmul below would wrap silently past 2^63 and
+                # rank on wrapped scores — refuse instead of guessing
+                raise OverflowError(
+                    f"integer top-k: |a|max·|b|max·d = {bound} >= 2^63, "
+                    "dot products overflow int64"
+                )
+            if bound < 2**53:
                 # every partial sum fits the float64 mantissa exactly, so the
                 # BLAS float matmul IS the exact integer product — 10-100×
                 # faster than NumPy's non-BLAS int64 matmul. The QUERY side is
@@ -699,7 +711,9 @@ def _int_topk(
                 # only the selected kk values per query are cast back.
                 neg_s = (-a).astype(np.float64) @ bmat.T.astype(np.float64)
             else:
-                neg_s = -(a @ bmat.T)  # exact int64 fallback (fixed-point extremes)
+                # exact int64 fallback (fixed-point extremes): every |dot|
+                # is ≤ bound < 2^63, so no partial sum wraps
+                neg_s = -(a @ bmat.T)
             if collapsed:
                 rows, sel_nids, vals = _topk_counts(
                     neg_s, counts, starts, pos_nids, first_nids, kk

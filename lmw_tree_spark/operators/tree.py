@@ -63,26 +63,32 @@ class CentroidTree:
     def leaf_ids(self) -> np.ndarray:
         return self.levels[-1].node_id
 
-    def to_rows(self) -> list[tuple[int, int, int, list[int]]]:
-        """Flatten to (level, node_id, parent_id, centroid words) rows — the
-        checkpointable table form (FIXTURES.md §4)."""
-        rows = []
+    def to_frame(self):
+        """Flatten to one (level, node_id, parent_id, centroid words) row per
+        node — the checkpointable table form (FIXTURES.md §4) — as a pandas
+        frame built from the level arrays without a per-node Python loop, so
+        ``createDataFrame`` ships it over Arrow instead of pickling row
+        tuples through a Python RDD stage."""
+        import pandas as pd
+
+        parts = []
         for li, lv in enumerate(self.levels):
             parent_ids = (
                 np.full(len(lv.node_id), -1, dtype=np.int64)
                 if li == 0
                 else self.levels[li - 1].node_id[lv.parent_idx]
             )
-            for j in range(len(lv.node_id)):
-                rows.append(
-                    (
-                        li + 1,
-                        int(lv.node_id[j]),
-                        int(parent_ids[j]),
-                        [int(x) for x in lv.centroid[j].view(np.int64)],
-                    )
+            parts.append(
+                pd.DataFrame(
+                    {
+                        "level": np.full(len(lv.node_id), li + 1, dtype=np.int32),
+                        "node_id": lv.node_id.astype(np.int64),
+                        "parent_id": parent_ids.astype(np.int64),
+                        "centroid": list(lv.centroid.view(np.int64)),
+                    }
                 )
-        return rows
+            )
+        return pd.concat(parts, ignore_index=True)
 
     def __getstate__(self):
         # derived descent tensors (_pads/_ppads) never travel — rebuilt per executor
@@ -93,7 +99,7 @@ class CentroidTree:
 
     @staticmethod
     def from_rows(rows, order: int) -> "CentroidTree":
-        """Inverse of to_rows (checkpoint restore)."""
+        """Inverse of to_frame (checkpoint restore) over row tuples."""
         by_level: dict[int, list] = {}
         for level, node_id, parent_id, words in rows:
             by_level.setdefault(int(level), []).append((int(node_id), int(parent_id), words))

@@ -1,4 +1,4 @@
-"""Per-stage checkpointing with snapshot versions and lineage metrics — the
+"""Per-stage checkpointing with snapshot versions and commit metrics — the
 resumability layer.
 
 Every pipeline stage commits an immutable SNAPSHOT (Iceberg-style semantics on
@@ -15,11 +15,15 @@ plain Parquet, since this sandbox has no Iceberg jars):
   write completes.
 - **Time travel**: ``read(stage, version=N)`` / ``metrics(stage, version=N)``
   read any retained snapshot; ``snapshots(stage)`` lists them.
-- **Lineage**: every snapshot's ``_metrics.json`` carries per-partition row
-  counts and (when a packed signature column is present) the signature
-  popcount distribution — the per-partition lineage + metrics the target spec
-  requires. The underscore prefix keeps Spark's parquet reader from treating
-  it as data.
+- **One-pass metrics**: a commit is ONE Spark write. Stage-level figures ride
+  that write as a ``DataFrame.observe`` Observation — ``rows``, plus the
+  signature popcount ``min``/``avg``/``max`` under ``sig_popcount`` when a
+  packed signature column is named — and the ``partitions`` list holds each
+  data file's row count from its parquet footer (what an Iceberg manifest
+  records); the file counts must sum to ``rows`` or the commit is refused.
+  ``schema`` stores the written schema, so re-reads skip Spark's
+  schema-inference job. The underscore prefix of ``_metrics.json`` keeps
+  Spark's parquet reader from treating it as data.
 
 A restarted run skips any stage whose latest snapshot is complete, mirroring
 the reference's per-iteration structure
@@ -35,8 +39,9 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def _has_iceberg(spark: SparkSession) -> str | None:
@@ -45,30 +50,6 @@ def _has_iceberg(spark: SparkSession) -> str | None:
         if k.startswith("spark.sql.catalog.") and "iceberg" in str(v).lower():
             return k.split(".")[3]
     return None
-
-
-def partition_lineage(df: DataFrame, sig_col: str | None = None) -> list[dict]:
-    """Per-partition row counts (+ signature popcount min/avg/max when available)."""
-    aggs = [F.count("*").alias("rows")]
-    if sig_col is not None and sig_col in df.columns:
-        pop = F.aggregate(
-            F.transform(sig_col, lambda w: F.bit_count(w).cast("long")),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        aggs += [
-            F.min(pop).alias("pop_min"),
-            F.avg(pop).alias("pop_avg"),
-            F.max(pop).alias("pop_max"),
-        ]
-    rows = (
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .agg(*aggs)
-        .orderBy("_pid")
-        .collect()
-    )
-    return [r.asDict() for r in rows]
 
 
 class Checkpointer:
@@ -150,40 +131,80 @@ class Checkpointer:
         return self.current_version(stage) is not None
 
     def write(self, stage: str, df: DataFrame, sig_col: str | None = None) -> DataFrame:
-        """Commit a new snapshot + lineage metrics; returns the re-read
-        DataFrame (truncated lineage — downstream plans start from the scan).
+        """Commit a new snapshot + metrics; returns the re-read DataFrame
+        (truncated lineage — downstream plans start from the scan).
 
         Commit protocol: parquet into a fresh version dir → metrics sidecar
         into the same dir → atomic ``_latest`` flip. Every step before the
         flip is invisible to readers; the flip itself is os.replace (atomic on
-        POSIX and on any correct HDFS/S3A rename-capable committer)."""
+        POSIX and on any correct HDFS/S3A rename-capable committer). The
+        write is the commit's only Spark job: row count and popcount stats
+        come from an Observation on it, per-file counts from the footers."""
+        import pyarrow.parquet as pq
+
         t0 = time.time()
         version = self._next_version(stage)
         vdir = self._version_dir(stage, version)
-        df.write.mode("overwrite").parquet(vdir)  # fresh dir; overwrite is for retries
-        out = self.spark.read.parquet(vdir)
+        obs = Observation()
+        aggs = [F.count(F.lit(1)).alias("rows")]
+        if sig_col is not None and sig_col in df.columns:
+            pop = F.aggregate(  # set bits of the packed array<long> signature
+                F.transform(sig_col, lambda w: F.bit_count(w).cast("long")),
+                F.lit(0).cast("long"),
+                lambda acc, x: acc + x,
+            )
+            aggs += [F.min(pop).alias("min"), F.avg(pop).alias("avg"), F.max(pop).alias("max")]
+        # fresh dir; overwrite is for retries
+        df.observe(obs, *aggs).write.mode("overwrite").parquet(vdir)
+        observed = obs.get
+        partitions = [
+            {"file": name, "rows": pq.read_metadata(os.path.join(vdir, name)).num_rows}
+            for name in sorted(os.listdir(vdir))
+            if name.endswith(".parquet")
+        ]
+        rows, file_rows = observed.pop("rows"), sum(p["rows"] for p in partitions)
+        if rows != file_rows:
+            raise RuntimeError(
+                f"checkpoint {stage!r} v{version}: {rows} rows observed, "
+                f"{file_rows} in the written files"
+            )
         metrics = {
             "stage": stage,
             "version": version,
-            "rows": out.count(),
+            "rows": rows,
             "write_seconds": round(time.time() - t0, 3),
             "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "partitions": partition_lineage(out, sig_col),
+            "schema": df.schema.json(),
+            "partitions": partitions,
         }
+        if observed:
+            metrics["sig_popcount"] = {"col": sig_col, **observed}
         with open(os.path.join(vdir, "_metrics.json"), "w") as f:
             json.dump(metrics, f, indent=1, default=str)
         tmp = self._latest_file(stage) + ".tmp"
         with open(tmp, "w") as f:
             f.write(f"v{version:05d}")
         os.replace(tmp, self._latest_file(stage))
-        return out
+        return self.spark.read.schema(df.schema).parquet(vdir)
 
     def read(self, stage: str, version: int | None = None) -> DataFrame:
-        """Read the latest snapshot, or ``version`` for time travel."""
+        """Read the latest snapshot, or ``version`` for time travel. The
+        schema recorded at commit spares the schema-inference job; snapshots
+        committed without one fall back to inference."""
         v = self.current_version(stage) if version is None else version
         if v is None:
             raise FileNotFoundError(f"no committed snapshot for stage {stage!r}")
-        return self.spark.read.parquet(self._version_dir(stage, v))
+        vdir = self._version_dir(stage, v)
+        if not os.path.isdir(vdir):  # e.g. expired
+            raise FileNotFoundError(f"no snapshot v{v} of stage {stage!r}")
+        try:
+            schema = self.metrics(stage, v).get("schema")
+        except FileNotFoundError:  # uncommitted version dir: no metrics sidecar
+            schema = None
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(json.loads(schema)))
+        return reader.parquet(vdir)
 
     def stage(self, stage: str, build, sig_col: str | None = None) -> DataFrame:
         """Resume-or-build: reuse the latest complete snapshot, else build and

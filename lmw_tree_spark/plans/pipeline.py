@@ -8,9 +8,9 @@
       → EM-tree fit       (TSVQ-seeded, distributed EM iterations)
       → assignments       (leaf cluster_id + distance + dup_group per image)
 
-Each stage checkpoints (parquet/Iceberg) with per-partition lineage metrics and is
-skipped on resume when complete. The tree itself is checkpointed as rows
-(FIXTURES.md §4 schema) so a restart continues from the fitted tree.
+Each stage checkpoints (parquet/Iceberg) with per-file row counts and stage
+metrics and is skipped on resume when complete. The tree itself is checkpointed
+as rows (FIXTURES.md §4 schema) so a restart continues from the fitted tree.
 """
 
 from __future__ import annotations
@@ -124,11 +124,7 @@ def run_pipeline(
         fit = emtree.em_tree_fit(sigs, cfg)
         tree, metrics = fit.tree, fit.metrics
         if ckpt is not None:
-            tree_df = spark.createDataFrame(
-                [(lvl, nid, pid, words) for lvl, nid, pid, words in tree.to_rows()],
-                TREE_STAGE_SCHEMA,
-            )
-            ckpt.write("tree", tree_df)
+            ckpt.write("tree", spark.createDataFrame(tree.to_frame(), TREE_STAGE_SCHEMA))
 
     assignments = staged(
         "assignments",

@@ -18,6 +18,7 @@ tumbling window) over the ingest stream for monitoring.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -121,14 +122,12 @@ def stream_em_updates(
         if counts.sum() == 0:
             return
         state["tree"] = update_tree(state["tree"], sums, counts)
-        order = state["tree"].order
-        rows = [
-            (int(batch_id), int(order), lvl, nid, pid, words)
-            for lvl, nid, pid, words in state["tree"].to_rows()
-        ]
+        frame = state["tree"].to_frame()
+        frame.insert(0, "tree_order", np.int32(state["tree"].order))
+        frame.insert(0, "batch_id", np.int64(batch_id))
         (
             spark.createDataFrame(
-                rows,
+                frame,
                 "batch_id long, tree_order int, level int, node_id long, "
                 "parent_id long, centroid array<long>",
             )

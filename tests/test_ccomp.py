@@ -74,3 +74,28 @@ def test_merge_dup_groups_incremental_maintenance(spark):
         "n2": "n2", "n3": "n2",   # all-new component
         "z1": "z1", "z2": "z1",   # untouched
     }
+
+
+def test_nonconvergence_raises_and_rounds_are_recorded(spark):
+    """A path graph needs several hash-to-min rounds: too few rounds must
+    raise instead of returning partial labels; enough rounds converge to the
+    component minimum, and the per-round changed-label counts end at 0."""
+    import pytest
+
+    from lmw_tree_spark.operators.ccomp import ConvergenceError
+
+    n = 40
+    edges = spark.createDataFrame(
+        [(f"v{i:03d}", f"v{i+1:03d}") for i in range(n - 1)], "src string, dst string"
+    )
+    with pytest.raises(ConvergenceError):
+        connected_components(edges, max_iters=2).collect()
+    rounds = []
+    got = connected_components(edges, max_iters=10, rounds=rounds).collect()
+    assert {r["dup_group"] for r in got} == {"v000"}
+    assert len(got) == n
+    assert rounds[-1] == 0 and all(c > 0 for c in rounds[:-1])
+    assert len(rounds) <= 10
+    # exactly as many rounds as it needed is enough
+    again = connected_components(edges, max_iters=len(rounds)).collect()
+    assert sorted(map(tuple, again)) == sorted(map(tuple, got))

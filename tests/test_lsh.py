@@ -1,6 +1,7 @@
 """LSH candidate generation + verification tests."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from lmw_tree_spark.config import SMALL
@@ -129,6 +130,58 @@ def test_small_bucket_emits_clique(spark):
     )
     edges = lsh.edges_from_buckets(df, pair_cap=64)
     assert edges.count() == 6  # C(4,2), chain edges are a subset
+
+
+def _replay_edges(rows, salts, pair_cap):
+    """Pure-Python replay of edges_from_buckets' three rules over
+    (bucket, id) rows: level-1 chains inside each (bucket, salt) group,
+    level-2 chains over each bucket's per-salt minimums, and all pairs of
+    buckets with 2 <= size <= pair_cap."""
+    from itertools import combinations
+
+    members, groups = {}, {}
+    for b, i in rows:
+        members.setdefault(b, []).append(i)
+        groups.setdefault((b, salts[i]), []).append(i)
+    out = set()
+    for ids in groups.values():
+        ids = sorted(ids)
+        out.update(zip(ids, ids[1:]))
+    for b, ids in members.items():
+        reps = sorted(min(g) for (gb, _s), g in groups.items() if gb == b)
+        out.update(zip(reps, reps[1:]))
+        if 2 <= len(ids) <= pair_cap:
+            out.update(combinations(sorted(ids), 2))
+    return out
+
+
+@pytest.mark.parametrize("key_type", ["long", "string"])
+def test_edges_from_buckets_matches_python_replay(spark, key_type):
+    """The fused bucket rollup (reps, sizes and small salt groups collected in
+    one aggregation) emits exactly the chain, rep-chain and clique edges of a
+    plain replay: buckets of size 1, 2, pair_cap and pair_cap+1, plus a large
+    one, with chain_salts=3 so salt groups collide inside every bucket."""
+    pair_cap, chain_salts = 5, 3
+    sizes = {1: 1, 2: 2, 3: pair_cap, 4: pair_cap + 1, 5: 40, 6: pair_cap}
+    rows, nxt = [], 0
+    for b, size in sizes.items():
+        for _ in range(size):
+            rows.append((b if key_type == "long" else f"gram{b}", f"id{nxt:04d}"))
+            nxt += 1
+    # ids shared across buckets, as LSH bands produce them
+    rows += [(rows[0][0], "id0003"), (rows[-1][0], "id0001")]
+    df = spark.createDataFrame(rows, f"bucket {key_type}, image_id string")
+    salts = {
+        r["image_id"]: r["salt"]
+        for r in df.select(
+            "image_id", F.pmod(F.xxhash64("image_id"), F.lit(chain_salts)).alias("salt")
+        ).collect()
+    }
+    assert len(set(salts.values())) == chain_salts  # every salt used: collisions
+    got = lsh.edges_from_buckets(df, pair_cap=pair_cap, chain_salts=chain_salts).collect()
+    got_set = {(r["src"], r["dst"]) for r in got}
+    assert len(got) == len(got_set)
+    assert got_set == _replay_edges(rows, salts, pair_cap)
 
 
 def test_minhash_agreement_col_matches_numpy(spark):

@@ -63,6 +63,82 @@ def test_checkpoint_lineage_metrics(spark, tmpdir_ck):
     assert ck.exists("imgs")
 
 
+def test_checkpoint_commit_metrics_match_recompute(spark, tmpdir_ck):
+    """The one-pass commit's figures — rows and popcount stats from an
+    Observation on the write, per-file rows from the parquet footers —
+    equal a direct recomputation over the committed snapshot."""
+    from pyspark.sql import functions as F
+
+    from lmw_tree_spark.operators.signature_stage import extract_signatures
+
+    ck = Checkpointer(spark, tmpdir_ck)
+    sigs = extract_signatures(generate_images(spark, 50), SMALL).repartition(3)
+    ck.write("sigs", sigs, sig_col="sig")
+    m = ck.metrics("sigs")
+    back = ck.read("sigs")
+    assert m["rows"] == back.count() == 50
+    per_file = {
+        os.path.basename(r["f"]): r["n"]
+        for r in back.groupBy(F.input_file_name().alias("f"))
+        .agg(F.count("*").alias("n"))
+        .collect()
+    }
+    assert {p["file"]: p["rows"] for p in m["partitions"] if p["rows"]} == per_file
+    assert sum(p["rows"] for p in m["partitions"]) == m["rows"]
+    pop = F.aggregate(
+        F.transform("sig", lambda w: F.bit_count(w).cast("long")),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+    want = back.select(pop.alias("p")).agg(
+        F.min("p").alias("min"), F.avg("p").alias("avg"), F.max("p").alias("max")
+    ).first()
+    got = m["sig_popcount"]
+    assert got["col"] == "sig"
+    assert (got["min"], got["max"]) == (want["min"], want["max"])
+    assert got["avg"] == pytest.approx(want["avg"], rel=1e-12)
+    # no signature column named: no popcount block
+    ck.write("plain", generate_images(spark, 5))
+    assert "sig_popcount" not in ck.metrics("plain")
+
+
+def test_checkpoint_reread_schema_matches_inferred(spark, tmpdir_ck):
+    """Both re-reads — write()'s return and read() — use the recorded schema
+    instead of inferring it; it must be the schema inference would give,
+    non-nullable and nested columns included."""
+    ck = Checkpointer(spark, tmpdir_ck)
+    df = spark.range(7).selectExpr(
+        "id",
+        "array(id, id + 1) AS words",
+        "named_struct('a', id, 'b', cast(id AS string)) AS s",
+        "map('k', id) AS m",
+    )
+    out = ck.write("t", df)
+    inferred = spark.read.parquet(ck._version_dir("t", 1))
+    assert out.schema == inferred.schema
+    assert ck.read("t").schema == inferred.schema
+    assert sorted(out.collect()) == sorted(inferred.collect())
+
+
+def test_checkpoint_commit_is_one_job(spark, tmpdir_ck):
+    """Committing an already-persisted frame submits a bounded number of
+    Spark jobs: the write itself, no count / lineage / inference passes."""
+    ck = Checkpointer(spark, tmpdir_ck)
+    sc = spark.sparkContext
+    df = generate_images(spark, 30).persist()
+    df.count()
+    sc.setJobGroup("ckpt-commit-jobs", "checkpoint commit")
+    try:
+        out = ck.write("imgs", df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("ckpt-commit-jobs")
+    df.unpersist()
+    assert 1 <= len(jobs) <= 2, jobs
+    assert ck.metrics("imgs")["rows"] == out.count() == 30
+
+
 def test_checkpoint_stage_skips_rebuild(spark, tmpdir_ck):
     ck = Checkpointer(spark, tmpdir_ck)
     calls = []

@@ -323,26 +323,39 @@ def test_sq8_corpus_sized_queries_bounded_grid(spark):
 
 
 def test_int_topk_exact_fallback_beyond_float53(spark):
-    """fixedpoint codes of magnitude ~2^40 overflow the float64-exact product
-    bound (amax·bmax·d ≥ 2^53), forcing the int64 matmul fallback — scores
-    must still be exact."""
+    """fixedpoint codes of magnitude ~2^29 break the float64-exact product
+    bound (amax·bmax·d ≥ 2^53) but stay inside int64 (< 2^63), forcing the
+    int64 matmul fallback — scores must still be exact. The replay uses
+    Python integers, so it cannot wrap along with the code under test."""
     from lmw_tree_spark.operators.pq import fixedpoint_topk
 
     n, d = 200, 4
     df, x = _det_df(spark, n, d)
-    big = df.selectExpr(
-        "vec_id", "transform(embedding, v -> v * 1048573.0D) AS embedding"
-    )
-    xb = x * 1048573.0
-    out = fixedpoint_topk(big, k=2, query_pred=None, )
-    pdf = out.toPandas()
-    f = np.floor(xb * float(1 << 20)).astype(np.int64)
+    big = df.selectExpr("vec_id", "transform(embedding, v -> v * 37.0D) AS embedding")
+    f = np.floor(x * 37.0 * float(1 << 20)).astype(np.int64)
+    amax = int(np.abs(f).max())
+    assert 2**53 <= amax * amax * d < 2**63
+    pdf = fixedpoint_topk(big, k=2, query_pred=None).toPandas()
+    exact = f.astype(object)
     nids = np.arange(n)
     for qid in (0, 3, 199):
-        s = f @ f[qid]
+        s = exact @ exact[qid]
         want = _np_topk_pairs(-s, nids, 2, qid)
         got = pdf[pdf.query_id == qid].sort_values("rank")
         assert [(-v, i) for v, i in zip(got.score, got.neighbor_id)] == want
+
+
+def test_int_topk_refuses_int64_overflow(spark):
+    """Codes of magnitude ~2^44 put amax·bmax·d past 2^63, where the int64
+    matmul would wrap and rank on wrapped scores: the scan must refuse."""
+    from lmw_tree_spark.operators.pq import fixedpoint_topk
+
+    df, _x = _det_df(spark, 200, 4)
+    big = df.selectExpr(
+        "vec_id", "transform(embedding, v -> v * 1048573.0D) AS embedding"
+    )
+    with pytest.raises(Exception, match="overflow int64"):
+        fixedpoint_topk(big, k=2, query_pred=None).toPandas()
 
 
 def test_topk_mask_mass_ties_exact():

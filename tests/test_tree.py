@@ -102,7 +102,9 @@ def test_descent_distance_is_true_leaf_distance(planted_signatures):
 def test_tree_rows_roundtrip(planted_signatures):
     sigs, _ = planted_signatures
     tree = em_iterations_numpy(tsvq_init(sigs[:80], 3, 2, 1, seed=3), sigs, 2)
-    restored = CentroidTree.from_rows(tree.to_rows(), order=3)
+    restored = CentroidTree.from_rows(
+        tree.to_frame().itertuples(index=False), order=3
+    )
     lp1, d1 = descend(tree, sigs)
     lp2, d2 = descend(restored, sigs)
     assert (tree.leaf_ids()[lp1] == restored.leaf_ids()[lp2]).all()
